@@ -46,7 +46,7 @@ K = 10
 BUILD_LAPS = 2  # cold, then warm; setup counts their median
 LONE_PER_SECOND = 100  # well-formed lone queries per --seconds
 LOAD_PER_SECOND = 100  # queries of the multi-client phase per --seconds
-LOAD_ROUNDS = 5
+ROUNDS = 10  # turns of lone slice + load round
 MALFORMED_EVERY = 101  # one malformed query per 100 well-formed ones
 WARMUP_QUERIES = 100  # untimed lone queries before the lone phase
 WARMUP_LOAD_QUERIES = 600  # untimed multi-client queries: fill the pool's term memos
@@ -320,17 +320,6 @@ class Bench:
         self.ledger.op(err, repr(query))
         return dt, bad
 
-    def lone_phase(self) -> None:
-        ok, rejects = [], []
-        for q in self.lone:
-            dt, bad = self.serve(q)
-            (rejects if bad else ok).append(dt)
-        self.lone_ms = [x * 1e3 for x in ok]
-        n = len(ok) // 5
-        fifths = [statistics.median(self.lone_ms[i * n : (i + 1) * n]) for i in range(5)]
-        self.log("lone p50 by fifth: " + " ".join(f"{x:.2f}" for x in fifths))
-        self.reject_ms = [x * 1e3 for x in rejects]
-
     def clients_round(self, queries: list[str]) -> tuple[float, list[float]]:
         """``queries`` split over min(4, nproc) closed-loop client threads
         -> (queries per second, per-query latencies in ms)."""
@@ -352,25 +341,34 @@ class Bench:
             th.join()
         return len(queries) / (time.perf_counter() - t), [x for c in lat for x in c]
 
-    def load_phase(self) -> None:
-        """LOAD_ROUNDS rounds over consecutive slices of the load sequence;
-        qps is the median round's, p99 is over every query."""
-        per_round = len(self.load) // LOAD_ROUNDS
-        rounds, self.load_ms = [], []
-        for r in range(LOAD_ROUNDS):
-            qps, lat = self.clients_round(self.load[r * per_round : (r + 1) * per_round])
+    def timed_phases(self) -> None:
+        """The lone and the load sequence, each cut into ROUNDS consecutive
+        slices, run in turns: lone slice, load round, lone slice, ... The
+        host's speed drifts over tens of seconds, so both phases sample it
+        over the whole timed window rather than each over one part of it.
+        qps is the median round's; percentiles are over every query."""
+        n_lone = -(-len(self.lone) // ROUNDS)
+        n_load = len(self.load) // ROUNDS
+        ok, rejects, rounds, self.load_ms = [], [], [], []
+        for r in range(ROUNDS):
+            for q in self.lone[r * n_lone : (r + 1) * n_lone]:
+                dt, bad = self.serve(q)
+                (rejects if bad else ok).append(dt * 1e3)
+            qps, lat = self.clients_round(self.load[r * n_load : (r + 1) * n_load])
             rounds.append(qps)
             self.load_ms += lat
+        self.lone_ms, self.reject_ms = ok, rejects
         self.load_qps = statistics.median(rounds)
+        n = len(ok) // ROUNDS
+        by_round = [statistics.median(ok[i * n : (i + 1) * n]) for i in range(ROUNDS)]
+        self.log("lone p50 by round: " + " ".join(f"{x:.2f}" for x in by_round))
         self.log("load qps by round: " + " ".join(f"{x:.1f}" for x in rounds))
 
     def e2e(self) -> dict:
         from refimage_spark.index.query import index_stats
 
-        self.lone_phase()
-        self.log("lone phase done")
-        self.load_phase()
-        self.log("load phase done")
+        self.timed_phases()
+        self.log("timed phases done")
         st = index_stats(self.index)
         return {
             "setup_s": (self.setup_s, "s"),
@@ -708,18 +706,41 @@ class Bench:
 
     def close(self) -> None:
         """Stop the serving pools, their forkserver, Spark and its JVM, then
-        wait until every process this run started has ended."""
+        wait until every process this run started has ended. Whatever the
+        orderly stop leaves (it may raise, or a worker spawn cut short by an
+        exception may be unknown to its pool) is killed after 30 s."""
+        import signal
+
+        started = descendants(os.getpid())
+        try:
+            self.stop_services()
+        finally:
+            deadline = time.monotonic() + 30
+            while left := [p for p in started if alive(p)]:
+                if time.monotonic() > deadline:
+                    for pid in left:
+                        try:
+                            os.kill(pid, signal.SIGKILL)
+                        except ProcessLookupError:
+                            pass
+                time.sleep(0.2)
+
+    def stop_services(self) -> None:
         import multiprocessing.forkserver as fs
         import multiprocessing.resource_tracker as rt
         import signal
 
-        started = descendants(os.getpid())
         q = sys.modules.get("refimage_spark.index.query")
         if q is not None:
             if q._SERVE_POOL is not None:
                 q._SERVE_POOL.shutdown(wait=True, cancel_futures=True)
             for sh in q._SERVE_SHARDS or []:
                 sh.ex.shutdown(wait=True, cancel_futures=True)
+        server = fs._forkserver._forkserver_pid
+        if server is not None:
+            # workers no pool knows of; the forkserver waits for them
+            for pid in descendants(server):
+                os.kill(pid, signal.SIGKILL)
         fs._forkserver._stop()
         rt._resource_tracker._stop()
         if self.spark is not None:
@@ -730,16 +751,6 @@ class Bench:
             gw.shutdown()
             gw.proc.stdin.close()  # the JVM exits when its stdin closes
             gw.proc.wait(timeout=60)
-        deadline = time.monotonic() + 30
-        while left := [p for p in started if alive(p)]:
-            if time.monotonic() > deadline:
-                for pid in left:
-                    try:
-                        os.kill(pid, signal.SIGKILL)
-                    except ProcessLookupError:
-                        pass
-            time.sleep(0.2)
-
 
 WRITE_METRICS = [
     "merge.append_s",
@@ -781,6 +792,28 @@ LAYER_UNITS = {
 }
 
 
+def abstract_unix_sockets() -> None:
+    """Bind multiprocessing's AF_UNIX listeners (the serving pool's
+    forkserver) in Linux's abstract socket namespace, as Python 3.12+
+    does, instead of as a file under TMPDIR. TMPDIR is inside the
+    checkout, and from a deep checkout that file's path passes the
+    108-byte limit of a socket path, so the pool cannot start."""
+    import itertools
+    import multiprocessing.connection as mpc
+    from multiprocessing import util
+
+    if not getattr(util, "abstract_sockets_supported", False):
+        return
+    arbitrary, seq = mpc.arbitrary_address, itertools.count()
+
+    def address(family):
+        if family == "AF_UNIX":
+            return f"\0perfbench-{os.getpid()}-{next(seq)}"
+        return arbitrary(family)
+
+    mpc.arbitrary_address = address
+
+
 def main() -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
@@ -799,8 +832,10 @@ def main() -> int:
     # multiprocessing's own exit handlers have cleaned their temp dirs
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
-    # keep the JVMs' temp files (native libraries, perf data) in the checkout
-    os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={work}/tmp -XX:-UsePerfData"
+    abstract_unix_sockets()
+    # keep the JVMs' temp files (native libraries, perf data) in the
+    # checkout; quoted, as the checkout path may hold spaces
+    os.environ["JAVA_TOOL_OPTIONS"] = f'-Djava.io.tmpdir="{work}/tmp" -XX:-UsePerfData'
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     # the session's JVM heap (session.py's knob): 2 GB is ample for 10k pages
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
